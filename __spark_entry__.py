@@ -168,7 +168,7 @@ def q_asof_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_asof_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 production path: vectorized union sort-merge (same oracle)."""
+    """J1 vectorized Arrow union sort-merge (same oracle)."""
     turns = _events_turns(spark, sf_dir).persist()
     feats = _session_feature_payload(spark, sf_dir, turns=turns)
     probes = _probes(spark, sf_dir, turns=turns)

@@ -2,17 +2,18 @@
 every entity x timestamp probe (SURVEY.md §2.3 J1 — north-rule mandate; the
 reference performs no joins).
 
-Two independent strategies, cross-checked in tests:
+Three strategies, cross-checked in tests:
 
 * ``asof_join_union_window`` — pure Spark SQL: tag both sides, union, one
-  window pass per entity ordered by (ts, side), ``last(payload,
+  window pass per entity ordered by (ts, side, payload), ``last(payload,
   ignorenulls=True)``, keep probe rows. Strictness (`<` vs `<=`) is encoded in
-  the tie order of the ``side`` column at equal timestamps. This is the
-  SQL-expressible form used as the DuckDB oracle — AND the scale path: it
-  never crosses the Arrow boundary, measured 8-13x faster than the Arrow
-  strategy at 30M probes with 8->32-core scaling at ~0.98 of the hardware
-  ceiling (BENCH/BASELINE.md). Paired with session_features_exact_sql the
-  whole probe pipeline is JVM-only.
+  the tie order of the ``side`` column at equal timestamps; feature rows that
+  share a timestamp are ordered by their payload, so the winner is
+  deterministic. This is the SQL-expressible form used as the DuckDB oracle —
+  AND the scale path and the strategy ``job.py --mode asof`` runs for every
+  engine: it never crosses the Arrow boundary, measured 8-13x faster than the
+  Arrow strategy at 30M probes with 8->32-core scaling at ~0.98 of the
+  hardware ceiling (BENCH/BASELINE.md).
 * ``asof_join_merge`` — cogrouped ``pd.merge_asof(...,
   allow_exact_matches=not strict)`` per entity bucket — readable, exact, but
   pays a Python call per entity.
@@ -20,10 +21,10 @@ Two independent strategies, cross-checked in tests:
   ONE hash co-shuffle on entity + partition-local sort by (entity, ts, side),
   then a single vectorized forward-fill pass per Arrow batch
   (np.maximum.accumulate over feature-row indices) with one carried feature
-  row across batch boundaries. No per-entity Python calls; the strategy for
-  pipelines that continue in pandas (the whole 30M-row stream pays the Arrow
-  socket once per side — per-executor on a cluster, but the dominant term on
-  one host).
+  row across batch boundaries. No per-entity Python calls, but every probe
+  crosses the Arrow socket both ways with all feature columns; it backs the
+  declared ``asof_fast``/``asof_tolerance``/``asof_running_vector`` queries,
+  not the job.
 
 Zero-leakage contract (strict=True): a probe at ts T sees only features with
 feature_ts strictly < T. Probes before any feature, and entities with no
@@ -79,12 +80,15 @@ def asof_join_union_window(
     strict: bool = True,
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Union-and-window as-of join. Returns probe rows + feature columns."""
+    """Union-and-window as-of join. Returns probe rows + feature columns.
+
+    The feature value columns must be orderable (no maps): they break ties."""
     vals = _feature_value_cols(features, feature_entity, feature_ts)
     tol_us = _tol_us(tolerance_seconds)
 
     # side tie-break at equal ts: strict -> probe sorts BEFORE the feature row
-    # (cannot see it); inclusive -> after.
+    # (cannot see it); inclusive -> after. Feature rows at equal ts sort by
+    # payload, so e.g. the higher of two same-µs session_ids always wins.
     probe_side, feat_side = (0, 1) if strict else (1, 0)
 
     f = features.select(
@@ -108,7 +112,7 @@ def asof_join_union_window(
 
     w = (
         Window.partitionBy("__ent")
-        .orderBy("__t_us", "__side")
+        .orderBy("__t_us", "__side", "__payload")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     joined = (

@@ -189,8 +189,12 @@ def run(argv: list[str] | None = None) -> int:
         raise SystemExit(
             "--mode incremental requires --turns-table and --features-table"
         )
+    if args.mode == "asof" and not args.probes:
+        raise SystemExit("--mode asof requires --probes")
+    if args.snapshot and args.format == "csv":
+        raise SystemExit("--snapshot applies to the parquet sink only")
 
-    from flow_feature_spark.asof import asof_join_fast
+    from flow_feature_spark.asof import asof_join_union_window
     from flow_feature_spark.io import resume_or_compute
     from flow_feature_spark.kernel import attach_feature_ts, extract_session_features
     from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
@@ -501,16 +505,9 @@ def run(argv: list[str] | None = None) -> int:
         if args.mode == "asof":
             probes = spark.read.parquet(args.probes)
             payload = feats.drop("session_start_ts", "session_end_ts")
-            if effective_engine in ("exact-sql", "expr"):
-                # keep the WHOLE pipeline JVM-only: the union-window as-of is
-                # measured 8-13x faster than the Arrow strategy at 30M probes
-                # and scales at ~0.98 vs the hardware ceiling 8->32
-                # (BENCH/BASELINE.md) — the Arrow sort-merge stays the
-                # strategy for pandas-side extensibility
-                from flow_feature_spark.asof import asof_join_union_window
-
-                return asof_join_union_window(payload, probes, strict=True)
-            return asof_join_fast(payload, probes, strict=True)
+            # JVM-only for every engine: the Arrow sort-merge would ship each
+            # probe with 72 null feature columns through Python and back
+            return asof_join_union_window(payload, probes, strict=True)
         return feats
 
     partition_cols: tuple[str, ...] | None = None
@@ -569,8 +566,6 @@ def run(argv: list[str] | None = None) -> int:
     else:
         out = compute()
 
-    if args.snapshot and args.format == "csv":
-        raise SystemExit("--snapshot applies to the parquet sink only")
     if args.format == "csv":
         w = out
         if args.mode != "sessionize":

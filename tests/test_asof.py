@@ -178,3 +178,27 @@ def test_asof_forward_is_strictly_later(spark):
             assert not later
         else:
             assert later and later[0][1] == r["session_id"]
+
+
+def test_union_window_equal_feature_ts_is_deterministic(spark):
+    """Two feature rows of one entity at the same feature_ts: the one that
+    sorts last by payload (here the higher session_id) wins, whatever order
+    the rows arrive in."""
+    import datetime as dt
+
+    ft = dt.datetime(2024, 1, 1, 0, 0, 10)
+    feats = spark.createDataFrame(
+        [(f"c{c}", ft, s, 3 - s) for c in range(8) for s in (2, 1)],
+        "conv_id string, feature_ts timestamp, session_id long, n_turns long",
+    ).coalesce(1)
+    probes = spark.createDataFrame(
+        [(f"c{c}", ft + dt.timedelta(seconds=d)) for c in range(8) for d in (0, 5)],
+        "entity_id string, probe_ts timestamp",
+    )
+    for strict in (True, False):
+        got = asof_join_union_window(feats, probes, strict=strict).collect()
+        for r in got:
+            if strict and r["probe_ts"] == ft:
+                assert r["session_id"] is None
+            else:
+                assert (r["session_id"], r["n_turns"]) == (2, 1), (strict, r)

@@ -10,6 +10,8 @@ import glob
 import json
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from flow_feature_spark import job
@@ -217,11 +219,17 @@ def test_job_stream_counts_engine(spark, tmp_path):
     assert got  # at least the gap-closed sessions flushed
 
 
-def test_job_asof_mode_engines_agree(spark, tmp_path):
-    """--mode asof: the JVM-only route (exact-sql + union-window) and the
-    Arrow route (kernel + sort-merge) must produce identical rows at r6 —
-    two genuinely different engines and two different as-of strategies."""
-    from pyspark.sql import functions as F
+def test_job_asof_mode_engines_agree(spark, tmp_path, monkeypatch):
+    """--mode asof attaches with the JVM union-window for every engine: the
+    default fused Arrow kernel and the exact-SQL engine produce identical
+    rows at r6, and no engine reaches a Python as-of strategy."""
+    from flow_feature_spark import asof
+
+    def _python_asof(*args, **kwargs):
+        raise AssertionError("job --mode asof called a Python as-of strategy")
+
+    monkeypatch.setattr(asof, "asof_join_fast", _python_asof)
+    monkeypatch.setattr(asof, "asof_join_merge", _python_asof)
 
     inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
     _write_input(spark, inp)
@@ -231,17 +239,77 @@ def test_job_asof_mode_engines_agree(spark, tmp_path):
     ).write.mode("overwrite").parquet(probes_p)
 
     outs = {}
-    for tag, eng in (("arrow", "kernel"), ("jvm", "exact-sql")):
+    for tag, engine in (("fast", []), ("kernel", ["--engine", "kernel"]),
+                        ("exact-sql", ["--engine", "exact-sql"])):
         out = f"{tmp_path}/asof_{tag}"
         assert job.run([
             "--input", inp, "--output", out, "--mode", "asof",
-            "--probes", probes_p, "--engine", eng, "--rounding", "r6",
+            "--probes", probes_p, "--rounding", "r6", *engine,
         ]) == 0
         outs[tag] = spark.read.parquet(out)
-    cols = sorted(outs["arrow"].columns)
-    a, b = outs["arrow"].select(cols), outs["jvm"].select(cols)
+    cols = sorted(outs["fast"].columns)
+    a, b = outs["fast"].select(cols), outs["exact-sql"].select(cols)
     assert a.count() == b.count() > 0
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_job_asof_equal_feature_ts_later_session_wins(spark, tmp_path):
+    """--reset-tool can close two sessions of one conv at the same µs (a
+    reset turn at the ts of the turn before it, nothing later in the conv;
+    the reset session gets a second turn at that ts because single-turn
+    sessions emit no vector). Both share (conv_id, feature_ts); the as-of
+    must attach the later session."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = []
+    for c in range(24):
+        start = t0 + dt.timedelta(hours=3 * c)
+        same = start + dt.timedelta(seconds=10)
+        rows += [
+            (f"c{c:02d}", 0, "user", "hello", None, start),
+            (f"c{c:02d}", 1, "assistant", "working", None, same),
+            (f"c{c:02d}", 2, "assistant", "again", "retry", same),
+            (f"c{c:02d}", 3, "user", "ok", None, same),
+        ]
+    inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
+    spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp",
+    ).repartition(4).write.parquet(inp)
+    spark.createDataFrame(
+        [(f"c{c:02d}", t0 + dt.timedelta(hours=3 * c, minutes=m))
+         for c in range(24) for m in (1, 90)],
+        "entity_id string, probe_ts timestamp",
+    ).write.parquet(probes_p)
+
+    out = f"{tmp_path}/asof"
+    assert job.run([
+        "--input", inp, "--output", out, "--mode", "asof",
+        "--probes", probes_p, "--engine", "kernel", "--reset-tool", "retry",
+        "--rounding", "r6",
+    ]) == 0
+    got = spark.read.parquet(out).select("session_id").collect()
+    assert len(got) == 48
+    assert {r["session_id"] for r in got} == {2}
+
+
+def test_job_asof_requires_probes(tmp_path):
+    with pytest.raises(SystemExit, match="--mode asof requires --probes"):
+        job.run(["--input", f"{tmp_path}/a", "--output", f"{tmp_path}/b",
+                 "--mode", "asof"])
+
+
+def test_job_snapshot_csv_rejected_before_checkpoint(spark, tmp_path):
+    """--snapshot --format csv is refused up front: no feature computation,
+    no committed --checkpoint, no output."""
+    inp, out, ckpt = f"{tmp_path}/in", f"{tmp_path}/out", f"{tmp_path}/ck"
+    _write_input(spark, inp, n_convs=6)
+    with pytest.raises(SystemExit, match="parquet sink only"):
+        job.run(["--input", inp, "--output", out, "--snapshot",
+                 "--format", "csv", "--checkpoint", ckpt])
+    assert not os.path.exists(ckpt) and not os.path.exists(out)
 
 
 def test_job_rollup_mode(spark, tmp_path):
